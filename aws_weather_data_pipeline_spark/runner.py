@@ -130,89 +130,97 @@ def validate(
     if now.tzinfo is None:
         now = now.replace(tzinfo=datetime.timezone.utc)
     res = ValidationResult()
-    # Six independent actions follow (counts, aggs, groupBys) — each
-    # is its own job over the serving table, so without a persist the
-    # validation pass rescans the parquet six times (review r06).
-    serving = spark.read.parquet(paths.serving_dir).persist()
-    # try/finally (review r11): an AnalysisException mid-validate —
-    # e.g. a missing column after a schema change — must not leak
-    # the cached table into a long-lived session
-    try:
-        total = serving.count()
-        res.stats["total_rows"] = total
-        res.checks["has_rows"] = total > 0
-
-        nulls = serving.filter(
-            F.col("station_id").isNull()
-            | F.col("city").isNull()
-            | F.col("timestamp").isNull()
-        ).count()
-        res.stats["null_critical_rows"] = nulls
-        res.checks["no_null_critical"] = nulls == 0
-
-        q = serving.agg(
-            F.avg("data_quality_score").alias("avg_q"),
-            F.min("data_quality_score").alias("min_q"),
-        ).first()
-        res.stats["avg_quality"] = q["avg_q"]
-        res.checks["quality_floor"] = (
-            q["avg_q"] is not None and q["avg_q"] >= MIN_AVG_QUALITY
+    serving = spark.read.parquet(paths.serving_dir)
+    # One grouped aggregate answers every check but uniqueness: per
+    # alert level (a handful of groups) the rows, the rows missing a
+    # critical field, the quality sum and scored-row count, and the
+    # latest reading; the driver folds those few rows. Each action is
+    # a Spark job with a fixed planning and scheduling cost, which at a
+    # day's size is most of the check.
+    # The latest reading is aggregated as epoch micros, not
+    # TimestampType: PySpark renders a collected timestamp through the
+    # driver process's OS timezone, so a non-UTC driver host would skew
+    # the staleness by the UTC offset (up to ±14h against the 24h
+    # bound). Epoch arithmetic has no zone.
+    null_critical = (
+        F.col("station_id").isNull()
+        | F.col("city").isNull()
+        | F.col("timestamp").isNull()
+    )
+    groups = (
+        serving.groupBy("alert_level")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(null_critical).alias("nulls"),
+            F.sum("data_quality_score").alias("q_sum"),
+            F.count("data_quality_score").alias("q_n"),
+            F.max(F.unix_micros("timestamp_parsed")).alias("latest_us"),
         )
+        .collect()
+    )
 
-        dist = {
-            r["alert_level"]: r["n"]
-            for r in serving.groupBy("alert_level")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        res.stats["alert_distribution"] = dist
-        res.checks["alert_levels_known"] = set(dist) <= {
-            "NORMAL",
-            "WATCH",
-            "WARNING",
-            "CRITICAL",
-        }
+    total = sum(g["n"] for g in groups)
+    res.stats["total_rows"] = total
+    res.checks["has_rows"] = total > 0
 
-        dup = (
-            serving.groupBy("station_id", "timestamp")
-            .count()
-            .filter("count > 1")
-            .count()
-        )
-        res.stats["duplicate_keys"] = dup
-        res.checks["unique_key"] = dup == 0
+    nulls = sum(g["nulls"] for g in groups)
+    res.stats["null_critical_rows"] = nulls
+    res.checks["no_null_critical"] = nulls == 0
 
-        # Freshness (reference README.md:750-755: NOW() - MAX(ts) < 1 day).
-        # One MAX aggregate over the persisted frame; the comparison
-        # happens driver-side on a single value.
-        # Aggregated as epoch micros, not TimestampType: PySpark renders a
-        # collected timestamp through the driver process's OS timezone, so
-        # a non-UTC driver host would skew the staleness by the UTC offset
-        # (up to ±14h against the 24h bound). Epoch arithmetic has no zone.
-        latest_us = serving.agg(
-            F.max(F.unix_micros("timestamp_parsed")).alias("latest_us")
-        ).first()["latest_us"]
-        latest = (
-            datetime.datetime.fromtimestamp(
-                latest_us / 1_000_000, datetime.timezone.utc
-            )
-            if latest_us is not None
-            else None
+    # the mean over every scored row, not a mean of per-level means
+    scored = sum(g["q_n"] for g in groups)
+    avg_q = (
+        sum(g["q_sum"] for g in groups if g["q_n"]) / scored
+        if scored
+        else None
+    )
+    res.stats["avg_quality"] = avg_q
+    res.checks["quality_floor"] = (
+        avg_q is not None and avg_q >= MIN_AVG_QUALITY
+    )
+
+    dist = {g["alert_level"]: g["n"] for g in groups}
+    res.stats["alert_distribution"] = dist
+    res.checks["alert_levels_known"] = set(dist) <= {
+        "NORMAL",
+        "WATCH",
+        "WARNING",
+        "CRITICAL",
+    }
+
+    dup = (
+        serving.groupBy("station_id", "timestamp")
+        .count()
+        .filter("count > 1")
+        .count()
+    )
+    res.stats["duplicate_keys"] = dup
+    res.checks["unique_key"] = dup == 0
+
+    # Freshness (reference README.md:750-755: NOW() - MAX(ts) < 1 day).
+    latest_us = max(
+        (g["latest_us"] for g in groups if g["latest_us"] is not None),
+        default=None,
+    )
+    latest = (
+        datetime.datetime.fromtimestamp(
+            latest_us / 1_000_000, datetime.timezone.utc
         )
-        age = (
-            now.timestamp() - latest_us / 1_000_000
-            if latest_us is not None
-            else None
-        )
-        res.stats["latest_timestamp"] = latest
-        res.stats["staleness_seconds"] = age
-        res.checks["fresh"] = (
-            age is not None
-            and -CLOCK_SKEW_TOLERANCE_SECONDS <= age < MAX_STALENESS_SECONDS
-        )
-        return res
-    finally:
-        serving.unpersist(False)
+        if latest_us is not None
+        else None
+    )
+    age = (
+        now.timestamp() - latest_us / 1_000_000
+        if latest_us is not None
+        else None
+    )
+    res.stats["latest_timestamp"] = latest
+    res.stats["staleness_seconds"] = age
+    res.checks["fresh"] = (
+        age is not None
+        and -CLOCK_SKEW_TOLERANCE_SECONDS <= age < MAX_STALENESS_SECONDS
+    )
+    return res
 
 
 def report(spark: SparkSession, paths: PipelinePaths) -> str:

@@ -7,8 +7,6 @@ The reference's sink surface, re-expressed Spark-first:
   (scripts/glue_weather_etl.py:483 partitions by year/month/day/hour,
   but no transform adds them: a latent bug). ``write_partitioned``
   derives them from the event timestamp before ``partitionBy``.
-- S9  JSON batch sink (scripts/kinesis_to_s3.py:229-252 raw zone).
-- S10 CSV sink (scripts/test_transformations.py:303-322).
 - S11 idempotent append — the reference's ``INSERT ... ON CONFLICT
   (station_id, reading_timestamp) DO NOTHING``
   (airflow/src/load_to_postgres.py:294-321) becomes dedup + left-anti
@@ -103,21 +101,38 @@ def overwrite_partitioned(
     ).partitionBy("year", "month", "day", "hour").parquet(path)
 
 
-def write_json(df: DataFrame, path: str) -> None:
-    """S9: raw-zone JSON batch sink."""
-    df.write.mode("overwrite").json(path)
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    """S10: CSV sink with header, like the reference's to_csv."""
-    df.write.mode("overwrite").option("header", True).csv(path)
-
-
 def write_orc(df: DataFrame, path: str) -> None:
     """ORC sink — columnar interchange with Hive-era consumers; same
     overwrite discipline as the parquet sinks (round-trip + pushdown
     verified in tests/test_readers.py)."""
     df.write.mode("overwrite").orc(path)
+
+
+def _read_existing(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None when it has no table yet.
+
+    A missing path is the first load, and is checked with the Hadoop
+    FileSystem of the session's conf (local, s3a, hdfs alike) rather
+    than by catching the failed read, which logs a long Java stack
+    trace. An existing but EMPTY directory (infra pre-provisioning) is
+    the same "nothing to conflict with" state. Any other failure —
+    unreadable schema, permissions, a corrupt-but-existing table —
+    propagates: treating it as "table absent" would skip conflict
+    detection and append duplicate keys into a table that very much
+    exists.
+    """
+    from pyspark.errors import AnalysisException
+
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return None
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        return None
 
 
 #: Upper bound on the number of distinct scope values collected to the
@@ -147,29 +162,8 @@ def idempotent_append(
     existing side after scoping is one day's partitions, so AQE will
     typically broadcast it.
     """
-    from pyspark.errors import AnalysisException
-
     deduped = new_rows.dropDuplicates(keys)
-    try:
-        existing = spark.read.parquet(path)
-    except AnalysisException as exc:
-        # ONLY PATH_NOT_FOUND means "first load, nothing to conflict
-        # with". Any other failure — unreadable schema, permissions, a
-        # corrupt-but-existing table — must propagate: treating it as
-        # "table absent" would skip conflict detection and append
-        # duplicate keys into a table that very much exists.
-        cond = (
-            exc.getCondition()
-            if hasattr(exc, "getCondition")
-            else exc.getErrorClass()
-        )
-        if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        # PATH_NOT_FOUND: first load. UNABLE_TO_INFER_SCHEMA: the
-        # directory exists but is EMPTY (infra pre-provisioning) —
-        # semantically the same "nothing to conflict with" state
-        # (review r11); any other condition still propagates.
-        existing = None
+    existing = _read_existing(spark, path)
     if existing is not None:
         if scope_col is not None:
             # The scope list is collected to the driver to become an
@@ -179,8 +173,12 @@ def idempotent_append(
             # fails with a clear message instead of OOMing the driver
             # at scale; such callers should use the plain (scope-less)
             # anti-join, which never leaves the executors.
+            # Collected from the incoming rows, not the deduplicated
+            # ones, so this job runs no dedup shuffle: dedup keeps a
+            # row of every key, so the scope can only get wider and no
+            # conflict is missed.
             scope_rows = (
-                deduped.select(scope_col)
+                new_rows.select(scope_col)
                 .distinct()
                 .limit(MAX_SCOPE_VALUES + 1)
                 .collect()

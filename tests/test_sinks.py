@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from aws_weather_data_pipeline_spark.sinks.writers import (
@@ -244,3 +245,18 @@ def test_concurrent_dynamic_overwrites_do_not_interfere(
     for p, n in zip(paths, before):
         # the seed partition must survive: static mode would drop it
         assert spark.read.parquet(p).count() == n + 6
+
+
+def test_idempotent_append_refuses_unreadable_existing_table(
+    spark, tmp_path
+):
+    """A serving table that exists but cannot be read is not a first
+    load: appending would skip conflict detection, so it must raise
+    and write nothing."""
+    out = tmp_path / "serving"
+    out.mkdir()
+    (out / "part-00000.parquet").write_bytes(b"not a parquet file")
+    keys = ["station_id", "timestamp_parsed"]
+    with pytest.raises(Exception):
+        idempotent_append(spark, _frame(spark), str(out), keys)
+    assert os.listdir(out) == ["part-00000.parquet"]
